@@ -223,12 +223,12 @@ def bench_cdc(spark, n_turns: int = 1_000_000) -> dict:
         write_batch_files(warm, warm_log)
         CdcIngest(
             os.path.join(work, "warm_table"), warm_log, num_buckets=32,
-            mode="mor", compact_max_files=8,
+            mode="mor",
         ).run(spark)
         shutil.rmtree(os.path.join(work, "warm_table"), ignore_errors=True)
         ing = CdcIngest(
             os.path.join(work, "table"), log_dir, num_buckets=32,
-            mode="mor", compact_max_files=8,
+            mode="mor",
         )
         t0 = time.perf_counter()
         results = ing.run(spark)

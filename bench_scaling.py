@@ -55,7 +55,7 @@ else:
     table = os.path.join(ram or work, f"scaling_table_{cpus}")
     shutil.rmtree(table, ignore_errors=True)
     try:
-        ing = CdcIngest(table, log, num_buckets=32, mode="mor", compact_max_files=8)
+        ing = CdcIngest(table, log, num_buckets=32, mode="mor")
         t0 = time.perf_counter()
         res = ing.run(spark)
         dt = time.perf_counter() - t0

@@ -117,9 +117,9 @@ else:
     try:
         # untimed JIT warm-up pass over a small separate log (see gen)
         CdcIngest(warm_table, os.path.join(work, "warmlog"), num_buckets=32,
-                  mode="mor", compact_max_files=8, collapse_impl=impl).run(spark)
+                  mode="mor", collapse_impl=impl).run(spark)
         shutil.rmtree(warm_table, ignore_errors=True)
-        ing = CdcIngest(table, log, num_buckets=32, mode="mor", compact_max_files=8,
+        ing = CdcIngest(table, log, num_buckets=32, mode="mor",
                         collapse_impl=impl)
         t0 = time.perf_counter()
         res = ing.run(spark)

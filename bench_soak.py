@@ -78,8 +78,7 @@ def main() -> None:
             "spark.sql.adaptive.enabled": "false",
         },
     )
-    ing = CdcIngest(table_dir, log_dir, num_buckets=32, mode="mor",
-                    compact_max_files=8)
+    ing = CdcIngest(table_dir, log_dir, num_buckets=32, mode="mor")
 
     # stable probe targets: conv ids exist across all rounds (same key space)
     probe_convs: list[str] = []

@@ -112,8 +112,7 @@ def main() -> None:
             "spark.sql.adaptive.enabled": "false",
         },
     )
-    ing = CdcIngest(table_dir, log_dir, num_buckets=32, mode="mor",
-                    compact_max_files=8)
+    ing = CdcIngest(table_dir, log_dir, num_buckets=32, mode="mor")
     feed = IncrementalFeed(table_dir, os.path.join(work, "feed_pos.json"))
 
     lsn_span = n_turns * 10 + 100 + max(n_turns // 20, 1) * 10 + 20
@@ -160,7 +159,7 @@ def main() -> None:
 
             def _racer(i: int) -> None:
                 rival = CdcIngest(table_dir, log_dir, num_buckets=32,
-                                  mode="mor", compact_max_files=8)
+                                  mode="mor")
                 pend = rival.pending()
                 tbl = rival.table()
                 barrier.wait()
@@ -235,7 +234,6 @@ def main() -> None:
         # should come from ROLLBACKS, not from expiry racing the consumer
         maint = table.maintain(
             spark,
-            compact_max_files=8,
             keep_last_snapshots=8,
             orphan_age_seconds=0,
         )

@@ -13,13 +13,15 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
 * **collapse** (W3): latest-wins by ``(event_ts, lsn)`` per key;
 * **merge**: ``mode='cow'`` = bucket-pruned copy-on-write rewrite
   (read-optimized); ``mode='mor'`` = merge-on-read delta append
-  (write-optimized) on a deliberately minimal job graph:
+  (write-optimized, one delta file per touched bucket) on a deliberately
+  minimal job graph:
 
       metadata count → [collapse → partitioned parquet write]
 
   where collapse is either the pure-JVM ``max_by`` aggregate (default —
   map-side partial aggregation, measured fastest: the post-collapse
-  bucket shuffle moves only one row per key) or the single-shuffle
+  ``repartition(num_buckets, __bucket)`` moves only one row per key and
+  gives each bucket one writer) or the single-shuffle
   Arrow ``mapInPandas`` dedup (``collapse_impl='arrow'`` — fewer
   shuffles but pays one Arrow round-trip of the full batch; the
   vectorized-apply stage of BASELINE.json:north_star). Admission
@@ -269,8 +271,7 @@ def _apply_mor(
     )
     version = snap.version + 1
     new_files = table.write_data_files(
-        incoming, version, kind="delta", pre_partitioned=pre_partitioned,
-        salt_cols=keys,
+        incoming, version, kind="delta", pre_partitioned=pre_partitioned
     )
     stats = _footer_stats(table, new_files)
     metrics = obs.get
@@ -325,6 +326,7 @@ def apply_batch(
     applied the SAME batch the retry degrades to ``status='skipped'`` —
     exactly-once holds under any interleaving. Data files staged by a
     lost attempt are unreferenced and reclaimed by ``cleanup_orphans``."""
+    snap = table.current()
     if quarantine_dir:
         # materialize rejected rows for inspection/replay-after-fix —
         # generalizes the reference's skip-and-log of unsupported sources
@@ -333,9 +335,8 @@ def apply_batch(
         # applied/floor test as the apply itself so a re-delivered batch
         # stays fully side-effect free (no Spark jobs, no rewrite of the
         # quarantine parquet a prior delivery already produced).
-        snap0 = table.current()
-        floor0 = int(snap0.summary.get("applied_floor", -1))
-        if str(batch_id) not in snap0.applied and batch_id > floor0:
+        floor0 = int(snap.summary.get("applied_floor", -1))
+        if str(batch_id) not in snap.applied and batch_id > floor0:
             _, rejected = validate_events(events)
             rejected.write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"batch_{batch_id:05d}")
@@ -343,7 +344,6 @@ def apply_batch(
 
     attempt = 0
     while True:
-        snap = table.current()
         # refresh handle state the snapshot is authoritative for: a rival
         # rebucket() between attempts would otherwise leave this handle
         # computing bucket_expr against the old modulus (the same staleness
@@ -387,3 +387,4 @@ def apply_batch(
             attempt += 1
             if attempt > max_commit_retries:
                 raise
+            snap = table.current()

@@ -166,7 +166,7 @@ def collapse_latest_wins_bucketed(
     clustering is satisfied by the repartition's output partitioning, so
     Catalyst plans **no second exchange**, and the output is already
     bucket-aligned for the delta write (``pre_partitioned=True``, ~P/nb
-    files per bucket — the same write-fanout the salted path provides).
+    files per bucket, where the default path writes one).
 
     Versus the default ``collapse_latest_wins`` (map-side-combined agg +
     post-collapse bucket repartition): raw events cross the wire once

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -25,9 +26,11 @@ from pyspark.sql import SparkSession
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
 from runyoro_llm_data_pipeline_spark.cdc.events import TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES, LakeTable
 
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
+_MAX_SPLIT = "spark.sql.files.maxPartitionBytes"
+_OPEN_COST = "spark.sql.files.openCostInBytes"
 
 
 class CdcIngest:
@@ -38,7 +41,7 @@ class CdcIngest:
         num_buckets: int = 16,
         normalize_text: bool = True,
         mode: str = "mor",
-        compact_max_files: int | None = 4,
+        compact_max_files: int | None = COMPACT_MAX_FILES,
         collapse_impl: str = "maxby",
         normalize_impl: str = "jvm",
         quarantine_dir: str | None = None,
@@ -46,12 +49,14 @@ class CdcIngest:
         compact_target_file_rows: int | None = None,
     ):
         """The default ``mode='mor'`` + ``compact_max_files=k`` is the
-        high-throughput configuration every published number uses: batches
-        append O(batch) delta files; any bucket accumulating more than k
-        live files is compacted inline (a data-only snapshot — resumable
-        like every other commit). ``compact_max_files=None`` disables
-        auto-compaction. ``mode='cow'`` trades write throughput for
-        scan-only reads (read-heavy tables, small batches).
+        high-throughput configuration every published number uses: each
+        batch appends one delta file per bucket it touches; any bucket
+        holding more than k delta files is compacted inline (a data-only
+        snapshot — resumable like every other commit); the default
+        ``COMPACT_MAX_FILES`` compacts every second batch.
+        ``compact_max_files=None`` disables auto-compaction. ``mode='cow'``
+        trades write throughput for scan-only reads (read-heavy tables,
+        small batches).
 
         ``truncate_keep`` bounds the applied-batch ledger: once more than
         that many entries are committed, a maintenance commit folds the
@@ -111,13 +116,19 @@ class CdcIngest:
         ]
 
     @staticmethod
-    def _tune_split_size(spark: SparkSession, batch_path: str) -> None:
+    @contextmanager
+    def _tune_split_size(spark: SparkSession, batch_path: str):
         """Right-size input splits for this batch: with the stock 128 MB
         ``maxPartitionBytes`` (+4 MB per-file open cost) a small catch-up
         batch collapses into 2-3 splits and the scan→normalize→partial-agg
         map stage — the CPU-heavy part of apply — serializes onto a few
-        cores. Target ≈ 2 splits per core, floored at 4 MB; at 10^10-event
-        scale batches are big and this converges back to the default."""
+        cores. Target ≈ 2 splits per core, floored at 1 MB; at 10^10-event
+        scale batches are big and this converges back to the default.
+        Scoped to the batch: on exit both settings return to their previous
+        session values (unset if they were unset), so the compactions,
+        lookups, feed polls and scans that follow plan with the session's
+        own split sizes."""
+        tuned = {}
         try:
             size = sum(
                 os.path.getsize(os.path.join(r, f))
@@ -125,12 +136,23 @@ class CdcIngest:
                 for f in fs
             )
         except OSError:
-            return
-        cores = spark.sparkContext.defaultParallelism
-        target = max(size // (cores * 2), 1024 * 1024)
-        target = min(target, 128 * 1024 * 1024)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))
+            pass
+        else:
+            cores = spark.sparkContext.defaultParallelism
+            target = max(size // (cores * 2), 1024 * 1024)
+            target = min(target, 128 * 1024 * 1024)
+            tuned = {_MAX_SPLIT: str(target), _OPEN_COST: str(512 * 1024)}
+        saved = {k: spark.conf.get(k, None) for k in tuned}
+        for k, v in tuned.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
     def run(
         self, spark: SparkSession, max_batches: int | None = None
@@ -142,21 +164,20 @@ class CdcIngest:
         for i, (batch_id, path) in enumerate(self.pending()):
             if max_batches is not None and i >= max_batches:
                 break
-            self._tune_split_size(spark, path)
-            events = spark.read.parquet(path)
-            results.append(
-                apply_batch(
-                    spark,
-                    table,
-                    events,
-                    batch_id,
-                    normalize_text=self.normalize_text,
-                    mode=self.mode,
-                    collapse_impl=self.collapse_impl,
-                    normalize_impl=self.normalize_impl,
-                    quarantine_dir=self.quarantine_dir,
+            with self._tune_split_size(spark, path):
+                results.append(
+                    apply_batch(
+                        spark,
+                        table,
+                        spark.read.parquet(path),
+                        batch_id,
+                        normalize_text=self.normalize_text,
+                        mode=self.mode,
+                        collapse_impl=self.collapse_impl,
+                        normalize_impl=self.normalize_impl,
+                        quarantine_dir=self.quarantine_dir,
+                    )
                 )
-            )
             if self.mode == "mor" and self.compact_max_files is not None:
                 hot = table.buckets_needing_compaction(self.compact_max_files)
                 if hot:

@@ -28,6 +28,8 @@ import time
 
 
 def main(argv: list[str] | None = None) -> int:
+    from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES
+
     p = argparse.ArgumentParser(description="CDC ingest: change log → lake table")
     p.add_argument("--table", required=True, help="lake table path")
     p.add_argument("--batch-dir", required=True, help="change-event batch directory")
@@ -36,7 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--collapse-impl", choices=("maxby", "bucket", "arrow"), default="maxby"
     )
-    p.add_argument("--compact-max-files", type=int, default=8)
+    p.add_argument("--compact-max-files", type=int, default=COMPACT_MAX_FILES)
     p.add_argument("--no-normalize", action="store_true")
     p.add_argument("--max-batches", type=int, default=None)
     p.add_argument("--streaming", action="store_true",

@@ -172,47 +172,6 @@ def _bucket_stats(changes: DataFrame):
     )
 
 
-def merge_append(
-    spark: SparkSession,
-    table: LakeTable,
-    changes: DataFrame,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    snap: Snapshot | None = None,
-) -> dict[str, Any]:
-    """Merge-on-read apply: write the collapsed batch as per-bucket *delta*
-    files and carry every existing file untouched — O(batch) work per batch
-    regardless of table size (the COW path is O(affected buckets)). Readers
-    collapse base ∪ deltas (``lake.table.collapse_stored``); ``compact()``
-    bounds read amplification. Same exactly-once/commutativity contract:
-    deletes persist as tombstones inside the deltas."""
-    snap = snap or table.current()
-    schema = evolve_schema(snap.schema(), changes)
-    keys = list(key_cols)
-
-    changes = changes.withColumn("__bucket", table.bucket_expr(key_cols[0]))
-    changes.cache()
-    try:
-        stats_rows = _bucket_stats(changes)
-        affected = {r["__bucket"] for r in stats_rows}
-        incoming = cast_to_schema(
-            _incoming_stored(changes, keys), schema
-        ).withColumn("__bucket", table.bucket_expr(key_cols[0]))
-        version = snap.version + 1
-        new_files = table.write_data_files(
-            incoming, version, buckets_hint=max(len(affected), 1), kind="delta"
-        )
-        return {
-            "new_files": new_files,
-            "carried_files": list(snap.files),
-            "schema": schema,
-            "affected_buckets": sorted(affected),
-            "bucket_stats": [r.asDict() for r in stats_rows],
-            "version": version,
-        }
-    finally:
-        changes.unpersist()
-
-
 def merge_into(
     spark: SparkSession,
     table: LakeTable,

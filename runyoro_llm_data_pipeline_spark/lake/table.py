@@ -71,6 +71,12 @@ VERSION_LSN = "_cdc_lsn"
 DELETED = "_cdc_deleted"
 INTERNAL_COLS = (VERSION_TS, VERSION_LSN, DELETED)
 
+# MOR compaction trigger shared by every ingest front-end: a bucket is
+# compacted once it holds more than this many delta files. A data commit
+# writes one delta file per bucket it touches, so 1 compacts every
+# second batch.
+COMPACT_MAX_FILES = 1
+
 
 @dataclass
 class Snapshot:
@@ -403,7 +409,7 @@ class LakeTable:
     def maintain(
         self,
         spark: SparkSession,
-        compact_max_files: int = 4,
+        compact_max_files: int = COMPACT_MAX_FILES,
         target_file_rows: int | None = None,
         truncate_keep: int = 4096,
         keep_last_snapshots: int = 4,
@@ -782,17 +788,18 @@ class LakeTable:
         buckets_hint: int | None = None,
         kind: str = "base",
         pre_partitioned: bool = False,
-        salt_cols: list[str] | None = None,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
     ) -> list[dict[str, Any]]:
         """Write ``df`` (must contain ``__bucket``) into this snapshot's data
         dir, one Parquet directory partition per bucket; returns manifest
         entries tagged ``kind`` (base = pre-collapsed, delta = MOR append).
-        Uses ``partitionBy`` so file→bucket is structural.
-        ``pre_partitioned=True`` skips the repartition — callers that
-        already shuffled on the bucket expression (the MOR single-shuffle
-        path) write straight through.
+        Uses ``partitionBy`` so file→bucket is structural, and the
+        repartition on ``__bucket`` puts each bucket in exactly one task, so
+        an unsplit write (no ``max_records_per_file``) yields one file per
+        bucket. ``pre_partitioned=True`` skips the repartition — callers
+        that already shuffled on the bucket expression (the MOR
+        single-shuffle paths) write straight through.
 
         The directory name carries a per-attempt nonce so two writers
         racing on the same version can never clobber each other's files —
@@ -801,19 +808,7 @@ class LakeTable:
         rel_dir = os.path.join(DATA_DIR, f"v{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
         if not pre_partitioned:
-            n_out = buckets_hint or self.num_buckets
-            if salt_cols:
-                # salt the write partitioning *within* buckets: a Zipf-hot
-                # conversation concentrates keys into one bucket, and an
-                # unsalted repartition makes that bucket's single writer
-                # the stage straggler. Multiple files per bucket are fine —
-                # the manifest lists them all. Key identity is untouched.
-                salt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(4)
-                )
-                df = df.repartition(n_out * 2, "__bucket", salt)
-            else:
-                df = df.repartition(n_out, "__bucket")
+            df = df.repartition(buckets_hint or self.num_buckets, "__bucket")
         if sort_cols:
             # cluster rows by key within each written file so parquet
             # row-group min/max statistics become selective — a point
@@ -852,11 +847,14 @@ class LakeTable:
         return entries
 
     # ----------------------------------------------------------- compaction
-    def buckets_needing_compaction(self, max_files: int = 4) -> set[int]:
+    def buckets_needing_compaction(
+        self, max_files: int = COMPACT_MAX_FILES
+    ) -> set[int]:
         """Buckets whose *delta* file count exceeds ``max_files`` — the MOR
-        read-amplification guard. Base files don't count: a batch write may
-        legitimately produce several (salt-split) files per bucket, and
-        read cost is driven by how many deltas must be re-collapsed."""
+        read-amplification guard. Each MOR batch adds one delta file per
+        bucket it touches, so this counts the batches whose deltas must be
+        re-collapsed on read. Base files don't count: a compaction may
+        split a big bucket into several key-contiguous base files."""
         counts: dict[int, int] = {}
         for f in self.current().files:
             if f.get("kind", "base") == "delta":
@@ -908,7 +906,12 @@ class LakeTable:
         collapse with tombstones retained — a stale replayed event must
         still lose to a newer delete). Data-only commit: the applied-offset
         map is untouched, so compaction is safe at any point and crash
-        during compaction simply leaves the previous snapshot current."""
+        during compaction simply leaves the previous snapshot current.
+        With ``target_file_rows`` a bucket whose one base file holds more
+        rows than the target is split too: an earlier compaction (e.g. the
+        ingester's inline one) may have written it without a target."""
+        import pyarrow.parquet as pq
+
         snap = self.current()
         if buckets is None:
             buckets = {f["bucket"] for f in snap.files}
@@ -918,6 +921,9 @@ class LakeTable:
             if sum(1 for f in snap.files if f["bucket"] == b) > 1
             or any(
                 f.get("kind", "base") == "delta"
+                or target_file_rows is not None
+                and pq.read_metadata(os.path.join(self.path, f["path"])).num_rows
+                > target_file_rows
                 for f in snap.files
                 if f["bucket"] == b
             )

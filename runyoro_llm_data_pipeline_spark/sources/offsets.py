@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
 from runyoro_llm_data_pipeline_spark.cdc.events import TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES, LakeTable
 
 OFFSETS_KEY = "log_offsets"
 PART_COL = "log_part"
@@ -156,7 +156,7 @@ class OffsetRangeIngest:
         num_buckets: int = 16,
         mode: str = "mor",
         normalize_text: bool = True,
-        compact_max_files: int | None = 8,
+        compact_max_files: int | None = COMPACT_MAX_FILES,
     ):
         self.table_path = table_path
         self.log = log

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
 from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES, LakeTable
 
 
 class CdcStreamIngest:
@@ -50,7 +50,7 @@ class CdcStreamIngest:
         num_buckets: int = 16,
         mode: str = "mor",
         normalize_text: bool = True,
-        compact_max_files: int | None = 8,
+        compact_max_files: int | None = COMPACT_MAX_FILES,
         max_files_per_trigger: int | None = None,
     ):
         self.table_path = table_path

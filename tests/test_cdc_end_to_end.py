@@ -193,7 +193,8 @@ def test_snapshot_expiry(spark, log, tmp_lake):
 
 def test_extreme_skew_hot_conversation(spark, tmp_lake, tmp_path_factory):
     """90% of all turns in ONE conversation: the map-side-combined collapse
-    and salted bucket writes must keep correctness (and not OOM a task).
+    and the one-writer-per-bucket delta write must keep correctness (and
+    not OOM the hot bucket's writer task).
     Perf evidence for the skew story is in BENCH.md/PLANS.md; this pins
     correctness under pathological skew."""
     d = str(tmp_path_factory.mktemp("skew"))

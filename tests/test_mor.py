@@ -73,6 +73,75 @@ def test_mor_auto_compaction_preserves_state(spark, log, tmp_lake):
     assert _rows(t.read(spark)) == expected
 
 
+def _new_files_by_bucket(t):
+    """For each batch commit, how many files it added to each bucket."""
+    out, prev = [], set()
+    for snap in t.history():
+        paths = {f["path"] for f in snap.files}
+        if snap.commit_type == "data" and snap.parent is not None:
+            per_bucket = {}
+            for f in snap.files:
+                if f["path"] not in prev:
+                    per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+            out.append(per_bucket)
+        prev = paths
+    return out
+
+
+def test_mor_commit_adds_one_delta_file_per_bucket(spark, log, tmp_lake):
+    batch_dir, expected = log
+    ing = CdcIngest(
+        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor",
+        compact_max_files=None,
+    )
+    ing.run(spark)
+    t = ing.table()
+    added = _new_files_by_bucket(t)
+    assert len(added) == 6
+    # every batch touches several buckets, and writes one file to each
+    assert all(len(per_bucket) > 1 for per_bucket in added)
+    assert all(n == 1 for per_bucket in added for n in per_bucket.values())
+    assert _rows(t.read(spark)) == expected
+
+
+def test_default_compaction_runs_every_second_batch(spark, log, tmp_lake):
+    batch_dir, _ = log
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
+    t = ing.table()
+
+    def maintenance_commits():
+        return sum(s.commit_type == "maintenance" for s in t.history())
+
+    ing.run(spark, max_batches=1)
+    assert maintenance_commits() == 0
+    ing.run(spark, max_batches=1)
+    assert maintenance_commits() == 1
+    assert not t.buckets_needing_compaction()
+
+
+def test_run_restores_split_size_settings(spark, log, tmp_lake):
+    """The per-batch split tuning must not leak into the session: a value
+    set before run() comes back, and an unset one is unset again."""
+    batch_dir, _ = log
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.set(keys[0], str(64 * 1024 * 1024))
+        spark.conf.unset(keys[1])
+        before = {k: spark.conf.get(k, None) for k in keys}
+        ing = CdcIngest(
+            os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor"
+        )
+        assert len(ing.run(spark, max_batches=2)) == 2
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_mor_resume_and_idempotency(spark, log, tmp_lake):
     batch_dir, expected = log
     ing = CdcIngest(
